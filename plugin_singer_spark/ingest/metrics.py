@@ -7,9 +7,7 @@ lowercased tag values and ``[_-] → .`` name mangling, emitted under the
 
 Engine side: every merge already writes a lineage record into the snapshot
 manifest (source offset range → snapshot version → row counts); this module
-adds (a) the Singer METRIC line parser for JSONL passthrough parity, and
-(b) ``observe()``-based per-batch record counts that arrive on the driver
-through the standard Observation API without extra jobs.
+adds the Singer METRIC line parser for JSONL passthrough parity.
 """
 
 from __future__ import annotations
@@ -18,9 +16,6 @@ import json
 import re
 from dataclasses import dataclass, field
 from typing import Any
-
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import Observation
 
 METRIC_PREFIX = "METRIC: "  # AbstractPythonSinger.java:327-331
 
@@ -67,15 +62,3 @@ def parse_metric_line(line: str) -> Metric | None:
 def parse_metric_lines(lines: list[str]) -> list[Metric]:
     return [m for m in (parse_metric_line(x) for x in lines) if m is not None]
 
-
-def observed_counts(df: DataFrame, name: str = "ingest") -> tuple[DataFrame, Observation]:
-    """Attach an Observation counting records/streams — metrics ride the
-    action that materializes the batch, no extra job (vs the reference's
-    separate count pass, taps/AbstractPythonTap.java:88-94)."""
-    obs = Observation(name)
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("record_count"),
-        F.approx_count_distinct("repo").alias("repos"),
-    )
-    return out, obs

@@ -145,12 +145,9 @@ def replay_cdc(
         # ``refence=True`` bypasses the skip for a PARTIAL tail epoch the
         # caller knows has since grown (replay_chunked's resume) — safe
         # because the merge is LWW-idempotent for the already-applied rows
-        fence = table.last_committed_epoch(checkpoint_id)
-        if epoch <= fence:
-            snap = table.snapshot()
-            return IngestReport(
-                stream, 0, snap.version, table.bookmarks(), {"skipped_epoch": epoch, "fence": fence}
-            )
+        skipped = fenced_skip(table, stream, epoch, checkpoint_id)
+        if skipped is not None:
+            return skipped
 
     props: dict[str, Any] = {}
     if epoch is not None and checkpoint_id is not None:
@@ -182,6 +179,17 @@ def replay_cdc(
         snap.version,
         table.bookmarks(),
         {"max_seq": rec.get("max_seq"), "dedup_rows": rec.get("dedup_rows")},
+    )
+
+
+def fenced_skip(table: LakeTable, stream: str, epoch: int, checkpoint_id: str) -> IngestReport | None:
+    """The report of a skipped epoch when ``epoch`` is at or below the
+    table's committed fence for ``checkpoint_id``, else None."""
+    fence = table.last_committed_epoch(checkpoint_id)
+    if epoch > fence:
+        return None
+    return IngestReport(
+        stream, 0, table.current_version(), table.bookmarks(), {"skipped_epoch": epoch, "fence": fence}
     )
 
 

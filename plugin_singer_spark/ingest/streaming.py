@@ -1,34 +1,48 @@
-"""Streaming CDC replay: Structured Streaming + chunked availableNow replay.
+"""CDC replay: four drivers over one epoch step.
 
-Two drivers over the same epoch-fenced merge core:
+Each driver cuts its input into epochs and hands every epoch of every
+stream to :func:`_epoch_step` — the reference's per-message demux loop
+(targets/AbstractPythonTarget.java:72-90) as one fenced commit:
+epoch-fence check (before any transform, so side outputs such as
+quarantine are not re-appended on replay) → RECORD parse → ``transform``
+→ archive → :func:`replay_cdc` (data, bookmark and fence in one atomic
+snapshot swap) → ACTIVATE_VERSION: a substring flag rides the merge's
+scan of raw JSONL, and only a flagged epoch pays ``scan_activation_fence``
+and ``activate_version``.
 
-- :func:`stream_binlog` — true Structured Streaming: ``readStream`` over the
-  binlog directory (file source, ``maxFilesPerTrigger`` ≈ the reference's
-  ``export_batch_rows`` chunking, taps/PipelinewiseMysql.java:93-96), with
-  ``foreachBatch`` doing the fenced MERGE. Spark's checkpoint gives offset
-  tracking; the table's epoch fence makes the sink idempotent — together
-  exactly-once (north_star).
-- :func:`replay_chunked` — deterministic seq-range micro-batches (the
-  ``trigger(availableNow=True)`` shape ≈ ``break_at_end_lsn``,
-  taps/PipelinewisePostgres.java:75-79). Used by the bench because batch
-  boundaries are bit-identical across parallelism levels.
+- :func:`replay_chunked` — seq-range epochs over a change-event DataFrame
+  (``trigger(availableNow=True)`` ≈ ``break_at_end_lsn``,
+  taps/PipelinewisePostgres.java:75-79); boundaries are bit-identical
+  across parallelism levels.
+- :func:`replay_files` — file-granular epochs over a staged parquet or
+  raw Singer JSONL directory; the benchmarked replay path.
+- :func:`stream_binlog` — Structured Streaming file source, one epoch per
+  ``foreachBatch`` micro-batch (``maxFilesPerTrigger`` ≈ the reference's
+  ``export_batch_rows``, taps/PipelinewiseMysql.java:93-96): Spark's
+  checkpoint tracks offsets, the epoch fence makes the sink idempotent.
+- :func:`stream_multi` — one streaming query over a raw JSONL artifact,
+  each micro-batch demuxed to every stream's table.
 
-Resume-from-checkpoint: both paths read the last committed seq bookmark /
-epoch fence from the table snapshot and continue mid-stream; killing the
-job between merge-commit and anything else loses nothing because bookmark,
-epoch and data are one atomic snapshot swap.
+The catalog job's LOG_BASED streams (``job.run_catalog_job``) use the same
+step. Resume: every driver reads the committed fence / seq bookmark from
+the table snapshot and continues mid-stream.
 """
 
 from __future__ import annotations
 
+import glob
+import itertools
 import os
-
+import shutil
+import time
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from plugin_singer_spark.ingest.pipeline import IngestReport, replay_cdc, seq_bookmark
+from plugin_singer_spark import messages
+from plugin_singer_spark.ingest.pipeline import IngestReport, fenced_skip, replay_cdc, seq_bookmark
+from plugin_singer_spark.lake import merge
 from plugin_singer_spark.lake.table import LakeTable
 
 
@@ -47,6 +61,51 @@ class ReplayStats:
     final_compact_sec: float = 0.0
 
 
+def _epoch_step(
+    table: LakeTable,
+    stream: str,
+    epoch: int,
+    checkpoint_id: str,
+    source: DataFrame,
+    parse: Callable[[DataFrame], DataFrame] | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    archive: Callable[[], list[str]] | None = None,
+    refence: bool = False,
+    **replay_kwargs: Any,
+) -> IngestReport:
+    """One epoch of one stream → one fenced commit (steps in the module
+    docstring). ``source`` is the epoch's typed change rows, or — with
+    ``parse`` — its raw Singer JSONL lines (column ``value``), which
+    ``parse`` turns into RECORD rows. ``archive`` retains the raw input and
+    returns the archived paths for the lineage record. ``refence`` re-runs
+    a committed epoch (replay_chunked's grown tail)."""
+    if not refence:
+        skipped = fenced_skip(table, stream, epoch, checkpoint_id)
+        if skipped is not None:
+            return skipped
+    flag = None
+    ev = source
+    if parse is not None:
+        # the flag rides the merge's scan (below json_tuple, so it cannot
+        # block the parse's column pruning — messages.observe_fence_flag)
+        flagged, flag = messages.observe_fence_flag(source, line_col="value")
+        ev = parse(flagged)
+    if transform is not None:
+        ev = transform(ev)
+    lineage_extra = {"archive": archive()} if archive is not None else None
+    rep = replay_cdc(
+        table, ev, stream=stream, epoch=epoch, checkpoint_id=checkpoint_id,
+        lineage_extra=lineage_extra, refence=refence, **replay_kwargs,
+    )
+    # a skipped epoch never ran the scan (flag.get would block); its
+    # activation was applied by the run that committed it
+    if flag is not None and "skipped_epoch" not in rep.metrics and flag.get.get("has_fence") is not None:
+        fence = messages.scan_activation_fence(source, stream, line_col="value")
+        if fence is not None:
+            merge.activate_version(table, below_seq=fence)
+    return rep
+
+
 def _rotation_shard(table, rotate: int | None, wave_idx: int) -> list[int] | None:
     """Staggered-compaction shard: wave i compacts only buckets with
     ``b % rotate == i % rotate`` (None = every bucket, the full profile).
@@ -63,6 +122,47 @@ def _rotation_shard(table, rotate: int | None, wave_idx: int) -> list[int] | Non
         return None
     n = table.snapshot().num_buckets
     return [b for b in range(n) if b % rotate == wave_idx % rotate]
+
+
+def _replay_epochs(
+    table: LakeTable,
+    stream: str,
+    checkpoint_id: str,
+    epochs: Iterable[tuple[int, dict[str, Any]]],
+    max_batches: int | None,
+    mode: str,
+    compact_every: int | None,
+    compact_rotate: int | None,
+    final_compact: bool,
+    on_batch: Callable[[IngestReport], None] | None = None,
+    **merge_kwargs: Any,
+) -> ReplayStats:
+    """The batch drivers' loop: each ``(epoch, step arguments)`` — drawn
+    lazily, at most ``max_batches`` — through :func:`_epoch_step`, then the
+    MOR compaction cadence: a wave after every ``compact_every``-th epoch
+    of the stream (absolute epoch count, so a resumed run keeps the
+    cadence), and one final compaction (``final_compact``)."""
+    stats = ReplayStats()
+    t0 = time.time()  # an epoch's time includes drawing it (its source scan set-up)
+    for epoch, step in itertools.islice(epochs, max_batches):
+        rep = _epoch_step(table, stream, epoch, checkpoint_id, mode=mode, **step, **merge_kwargs)
+        stats.events += rep.record_count
+        stats.batches += 1
+        stats.reports.append(rep)
+        if on_batch:
+            on_batch(rep)
+        done = epoch + 1
+        if mode == "mor" and compact_every and done % compact_every == 0:
+            merge.compact(table, min_delta_files=max(1, compact_every),
+                          buckets=_rotation_shard(table, compact_rotate, done // compact_every))
+        now = time.time()
+        stats.epoch_secs.append(round(now - t0, 3))
+        t0 = now
+    if mode == "mor" and final_compact:
+        t0 = time.time()
+        merge.compact(table, min_delta_files=1)
+        stats.final_compact_sec = round(time.time() - t0, 3)
+    return stats
 
 
 def replay_chunked(
@@ -86,26 +186,19 @@ def replay_chunked(
     Epoch i covers seqs (i*batch_events, (i+1)*batch_events]. Epoch number
     doubles as the fence value, so a re-run (same checkpoint_id) skips every
     already-committed epoch — crash anywhere, re-run, converge.
+    ``transform`` runs per epoch on that epoch's seq range.
 
     ``mode='mor'`` appends delta files per epoch (write cost O(batch), the
     10^10-event replay shape) and compacts every ``compact_every`` epochs
     and/or once at the end (``final_compact``) so reads stay bounded.
     """
-    import time as _time
-
-    from plugin_singer_spark.lake.merge import compact
-    stats = ReplayStats()
-    if transform is not None:
-        binlog = transform(binlog)
     bounds = binlog.agg(F.min("seq").alias("lo"), F.max("seq").alias("hi")).collect()[0]
     if bounds["hi"] is None:
-        return stats
+        return ReplayStats()
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
     start_epoch = 0
     refence_epoch = None
     if resume:
-        from plugin_singer_spark.ingest.pipeline import seq_bookmark
-
         fence = table.last_committed_epoch(checkpoint_id)
         start_epoch = fence + 1
         bm = seq_bookmark(table, stream)
@@ -121,43 +214,42 @@ def replay_chunked(
                 # zero epochs (hi == bookmark).
                 start_epoch = fence
                 refence_epoch = fence
-    epoch = start_epoch
-    while True:
-        from_seq = lo - 1 + epoch * batch_events
-        to_seq = lo - 1 + (epoch + 1) * batch_events
-        if from_seq >= hi:
-            break
-        if max_batches is not None and stats.batches >= max_batches:
-            break
-        _t0 = _time.time()
-        rep = replay_cdc(
-            table,
-            binlog,
-            stream=stream,
-            from_seq=from_seq,
-            to_seq=to_seq,
-            epoch=epoch,
-            checkpoint_id=checkpoint_id,
-            mode=mode,
-            refence=(epoch == refence_epoch),
-            **merge_kwargs,
-        )
-        stats.events += rep.record_count
-        stats.batches += 1
-        stats.reports.append(rep)
-        if on_batch:
-            on_batch(rep)
-        epoch += 1
-        if mode == "mor" and compact_every and (epoch - start_epoch) % compact_every == 0:
-            compact(table, min_delta_files=max(1, compact_every),
-                    buckets=_rotation_shard(table, compact_rotate,
-                                            (epoch - start_epoch) // compact_every))
-        stats.epoch_secs.append(round(_time.time() - _t0, 3))
-    if mode == "mor" and final_compact:
-        _t0 = _time.time()
-        compact(table, min_delta_files=1)
-        stats.final_compact_sec = round(_time.time() - _t0, 3)
-    return stats
+
+    def epochs():
+        epoch = start_epoch
+        while (from_seq := lo - 1 + epoch * batch_events) < hi:
+            to_seq = from_seq + batch_events
+            yield epoch, {
+                "source": binlog.filter((F.col("seq") > from_seq) & (F.col("seq") <= to_seq)),
+                "refence": epoch == refence_epoch,
+                "from_seq": from_seq,
+                "to_seq": to_seq,
+            }
+            epoch += 1
+
+    return _replay_epochs(
+        table, stream, checkpoint_id, epochs(), max_batches, mode, compact_every,
+        compact_rotate, final_compact, on_batch, transform=transform, **merge_kwargs,
+    )
+
+
+def _archive_files(archive_dir: str, epoch: int, files: list[str]) -> list[str]:
+    """Copy an epoch's raw files under ``<archive_dir>/epoch=<n>/``
+    (hardlink when possible). Runs BEFORE the merge commit: a crash after
+    the commit still leaves the pointer valid (at-least-once for the copy,
+    exactly-once for the commit — re-archiving is idempotent)."""
+    adir = os.path.join(archive_dir, f"epoch={epoch}")
+    os.makedirs(adir, exist_ok=True)
+    archived = []
+    for f in files:
+        dst = os.path.join(adir, os.path.basename(f))
+        if not os.path.exists(dst):
+            try:
+                os.link(f, dst)
+            except OSError:
+                shutil.copy2(f, dst)
+        archived.append(dst)
+    return archived
 
 
 def replay_files(
@@ -177,24 +269,17 @@ def replay_files(
     max_batches: int | None = None,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     archive_dir: str | None = None,
-    activate_fences: bool = True,
     **merge_kwargs: Any,
 ) -> ReplayStats:
     """Replay a staged binlog directory in FILE-granular micro-batches: one
     epoch reads only its own k files — zero re-scans of the full log (the
     ``maxFilesPerTrigger`` shape, without Structured Streaming's driver).
 
-    ``activate_fences`` (lean-jsonl path only): detect ACTIVATE_VERSION
-    resync fences with an extra substring-prefiltered scan per epoch
-    (messages.scan_activation_fence). Costs one additional sequential read
-    of the epoch's raw files; set False for streams that never resync.
-
     ``archive_dir`` retains each epoch's consumed raw files under
-    ``<archive_dir>/epoch=<n>/`` (hardlink when possible, copy otherwise)
-    BEFORE the merge commits, and records the archive paths in the epoch's
-    lineage record — the ``archive_load_files`` retention contract
-    (targets/PipelinewiseSnowflake.java:368-376): every commit points at a
-    replayable copy of exactly the raw input it consumed.
+    ``<archive_dir>/epoch=<n>/`` BEFORE the merge commits, and records the
+    archive paths in the epoch's lineage record — the ``archive_load_files``
+    retention contract (targets/PipelinewiseSnowflake.java:368-376): every
+    commit points at a replayable copy of exactly the raw input it consumed.
 
     ``input_format='jsonl'`` replays the raw Singer JSONL artifact: each
     epoch parses the envelope (one ``json_tuple`` per line) and casts RECORD
@@ -202,7 +287,8 @@ def replay_files(
     tap→target pipeline (tap stdout → typed rows → MERGE), fully
     vectorized/codegen'd. Part files are seq-ordered by construction
     (datagen.write_singer_jsonl) but correctness does not depend on it: the
-    merge is sequence-conditional.
+    merge is sequence-conditional. ACTIVATE_VERSION resync fences apply in
+    the epoch that carries them.
 
     Epoch fencing + bookmarks commit atomically with each merge, exactly as
     in :func:`replay_chunked`; the epoch number is the file-chunk index, so
@@ -215,20 +301,13 @@ def replay_files(
     under the fence. For seq-carrying streams without that naming, use
     :func:`replay_chunked` (seq-range epochs + grow-into-tail re-run).
     """
-    import glob as _glob
-
-    from plugin_singer_spark.lake.merge import compact
-    from plugin_singer_spark import messages
-
     from plugin_singer_spark.lake.evolution import evolve_schema
 
-    stats = ReplayStats()
-    files = sorted(_glob.glob(os.path.join(src_dir, "part-*")))
+    files = sorted(glob.glob(os.path.join(src_dir, "part-*")))
     if not files:
-        return stats
+        return ReplayStats()
     chunks = [files[i : i + files_per_batch] for i in range(0, len(files), files_per_batch)]
     start_epoch = (table.last_committed_epoch(checkpoint_id) + 1) if resume else 0
-    import time as _time
 
     # live schema registry (record_schema=None): folds in-band SCHEMA
     # messages across epochs — a mid-stream SCHEMA with a new column evolves
@@ -249,103 +328,57 @@ def replay_files(
         ]
         live_schema = _T.StructType(data_fields + [_T.StructField("op", _T.StringType())])
 
-    for epoch in range(start_epoch, len(chunks)):
-        if max_batches is not None and stats.batches >= max_batches:
-            break
-        _t0 = _time.time()
-        chunk = chunks[epoch]
-        fence_obs = None
-        activations: list[int] = []
-        if input_format == "parquet":
-            ev = spark.read.parquet(*chunk)
-        elif record_schema is not None:
-            lines = spark.read.text(chunk)
-            if activate_fences:
-                # near-free resync detection riding the scan (flag only);
-                # the full fence pass runs only when the flag fires
-                lines, fence_obs = messages.observe_fence_flag(lines, line_col="value")
-            ev = messages.parse_records_lean(lines, stream, record_schema, line_col="value")
-        else:
-            lines = spark.read.text(chunk)
-            env = messages.parse_lines(lines, line_col="value", seq_from_envelope=True)
-            for _seq, s_name, struct, _keys in messages.collect_schemas(env):
-                if s_name == stream:
-                    live_schema = struct if live_schema is None else evolve_schema(live_schema, struct)
-            if live_schema is None:
-                raise ValueError(
-                    f"stream {stream!r}: RECORD before any SCHEMA message and no record_schema given"
-                )
-            activations = [
-                fence for _s, s_name, fence in messages.collect_activate_versions(env) if s_name == stream
-            ]
-            ev = messages.records_for_stream(env, stream, live_schema, keep_envelope=("seq",))
-        if transform is not None:
-            # load-side stages from the job config (stream maps, flatten,
-            # validate, metadata columns) — applied per epoch, pre-merge
-            ev = transform(ev)
-        lineage_extra = None
-        if archive_dir is not None:
-            # archive BEFORE the merge commit: a crash after the commit
-            # still leaves the pointer valid (at-least-once for the copy,
-            # exactly-once for the commit — re-archiving is idempotent)
-            adir = os.path.join(archive_dir, f"epoch={epoch}")
-            os.makedirs(adir, exist_ok=True)
-            archived = []
-            for f in chunk:
-                dst = os.path.join(adir, os.path.basename(f))
-                if not os.path.exists(dst):
-                    try:
-                        os.link(f, dst)
-                    except OSError:
-                        import shutil as _shutil
+    def parse_lean(lines: DataFrame) -> DataFrame:
+        return messages.parse_records_lean(lines, stream, record_schema, line_col="value")
 
-                        _shutil.copy2(f, dst)
-                archived.append(dst)
-            lineage_extra = {"archive": archived}
-        rep = replay_cdc(
-            table,
-            ev,
-            stream=stream,
-            epoch=epoch,
-            checkpoint_id=checkpoint_id,
-            mode=mode,
-            lineage_extra=lineage_extra,
-            **merge_kwargs,
-        )
-        stats.events += rep.record_count
-        stats.batches += 1
-        stats.reports.append(rep)
-        if fence_obs is not None and rep.metrics.get("skipped_epoch") is None:
-            # the lean parse drops non-RECORD rows before the merge, so
-            # resync fences need their own detection (ADVICE r2). The flag
-            # observation rode the merge's scan (a fenced-skip epoch never
-            # ran it — obs.get would block — but its activation was applied
-            # on the first run); only a flagged epoch pays the real fence
-            # pass. NOT an Observation on the parsed node: CollectMetrics
-            # there blocks pruning for the merge's auxiliary passes
-            # (measured 3× epoch cost).
-            if fence_obs.get.get("has_fence") is not None:
-                fence = messages.scan_activation_fence(
-                    spark.read.text(chunk), stream, line_col="value"
-                )
-                if fence is not None:
-                    activations.append(int(fence))
-        if activations:
-            # ACTIVATE_VERSION in this epoch: rows older than the (last)
-            # activation point were not re-sent by the resync — drop them
-            from plugin_singer_spark.lake.merge import activate_version
+    def parse_registry(lines: DataFrame) -> DataFrame:
+        nonlocal live_schema
+        env = messages.parse_lines(lines, line_col="value", seq_from_envelope=True)
+        for _seq, s_name, struct, _keys in messages.collect_schemas(env):
+            if s_name == stream:
+                live_schema = struct if live_schema is None else evolve_schema(live_schema, struct)
+        if live_schema is None:
+            raise ValueError(
+                f"stream {stream!r}: RECORD before any SCHEMA message and no record_schema given"
+            )
+        return messages.records_for_stream(env, stream, live_schema, keep_envelope=("seq",))
 
-            activate_version(table, below_seq=max(activations))
-        if mode == "mor" and compact_every and (epoch + 1) % compact_every == 0:
-            compact(table, min_delta_files=max(1, compact_every),
-                    buckets=_rotation_shard(table, compact_rotate,
-                                            (epoch + 1) // compact_every))
-        stats.epoch_secs.append(round(_time.time() - _t0, 3))
-    if mode == "mor" and final_compact:
-        _t0 = _time.time()
-        compact(table, min_delta_files=1)
-        stats.final_compact_sec = round(_time.time() - _t0, 3)
-    return stats
+    def epochs():
+        for epoch in range(start_epoch, len(chunks)):
+            chunk = chunks[epoch]
+            step: dict[str, Any] = {}
+            if input_format == "parquet":
+                step["source"] = spark.read.parquet(*chunk)
+            else:
+                step["source"] = spark.read.text(chunk)
+                step["parse"] = parse_lean if record_schema is not None else parse_registry
+            if archive_dir is not None:
+                step["archive"] = lambda: _archive_files(archive_dir, epoch, chunk)
+            yield epoch, step
+
+    return _replay_epochs(
+        table, stream, checkpoint_id, epochs(), max_batches, mode, compact_every,
+        compact_rotate, final_compact, transform=transform, **merge_kwargs,
+    )
+
+
+def _start(
+    src: DataFrame,
+    handle: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+    processing_time: str | None,
+):
+    """Start a foreachBatch query. ``processing_time`` is a time-based
+    flush — the ``batch_wait_limit_seconds`` analog
+    (targets/PipelinewiseSnowflake.java:300-304): commit an epoch every
+    interval instead of running the source dry in one availableNow pass."""
+    writer = src.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
+    if processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    elif available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_multi(
@@ -376,32 +409,20 @@ def stream_multi(
         spark.readStream.option("maxFilesPerTrigger", str(max_files_per_trigger))
         .text(binlog_dir)
     )
+    transforms = transforms or {}
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        from plugin_singer_spark import messages
-
-        env = messages.parse_lines(batch_df, line_col="value", seq_from_envelope=True)
         for stream, table in tables.items():
-            if epoch_id <= table.last_committed_epoch(checkpoint_id):
-                continue  # this table already has this epoch (partial-crash replay)
-            ev = messages.records_for_stream(env, stream, schemas[stream], keep_envelope=("seq",))
-            if transforms and stream in transforms:
-                ev = transforms[stream](ev)
-            replay_cdc(
-                table,
-                ev,
-                stream=stream,
-                epoch=int(epoch_id),
-                checkpoint_id=checkpoint_id,
-                **merge_kwargs,
+            def parse(lines: DataFrame, stream=stream) -> DataFrame:
+                env = messages.parse_lines(lines, line_col="value", seq_from_envelope=True)
+                return messages.records_for_stream(env, stream, schemas[stream], keep_envelope=("seq",))
+
+            _epoch_step(
+                table, stream, int(epoch_id), checkpoint_id, batch_df, parse=parse,
+                transform=transforms.get(stream), **merge_kwargs,
             )
 
-    writer = src.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(src, handle, checkpoint_dir, available_now, processing_time)
 
 
 def stream_binlog(
@@ -444,57 +465,18 @@ def stream_binlog(
             .parquet(binlog_dir)
         )
 
+    def parse(lines: DataFrame) -> DataFrame:
+        return messages.parse_records_lean(lines, stream, record_schema, line_col="value")
+
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        fence = table.last_committed_epoch(checkpoint_id)
-        if epoch_id <= fence:
-            return  # replayed epoch — already committed, skip (idempotent)
-        # NOTE: no seq-bookmark filter here — the file source's micro-batches
-        # are not globally seq-ordered (a later batch can carry lower seqs),
-        # and Spark's checkpoint already delivers each file exactly once.
-        # LWW merge makes any cross-batch ordering converge; the epoch fence
+        # no seq-bookmark filter: the file source's micro-batches are not
+        # globally seq-ordered (a later batch can carry lower seqs), and
+        # Spark's checkpoint already delivers each file exactly once. LWW
+        # merge makes any cross-batch ordering converge; the epoch fence
         # alone guards replays.
-        raw_lines, fence_obs = None, None
-        if input_format == "jsonl":
-            from plugin_singer_spark import messages
-
-            # flag observation rides the scan (below json_tuple, so it
-            # cannot block the parse's column pruning — see
-            # messages.observe_fence_flag); a flagged batch pays one extra
-            # prefiltered pass for the fence value
-            raw_lines = batch_df
-            flagged, fence_obs = messages.observe_fence_flag(batch_df, line_col="value")
-            batch_df = messages.parse_records_lean(
-                flagged, stream, record_schema, line_col="value"
-            )
-        if transform is not None:
-            batch_df = transform(batch_df)
-        rep = replay_cdc(
-            table,
-            batch_df,
-            stream=stream,
-            epoch=int(epoch_id),
-            checkpoint_id=checkpoint_id,
-            **merge_kwargs,
+        _epoch_step(
+            table, stream, int(epoch_id), checkpoint_id, batch_df,
+            parse=parse if input_format == "jsonl" else None, transform=transform, **merge_kwargs,
         )
-        if (
-            fence_obs is not None
-            and rep.metrics.get("skipped_epoch") is None
-            and fence_obs.get.get("has_fence") is not None
-        ):
-            from plugin_singer_spark import messages
 
-            fence_v = messages.scan_activation_fence(raw_lines, stream, line_col="value")
-            if fence_v is not None:
-                from plugin_singer_spark.lake.merge import activate_version
-
-                activate_version(table, below_seq=int(fence_v))
-
-    writer = src.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
-    if processing_time is not None:
-        # time-based flush — the ``batch_wait_limit_seconds`` analog
-        # (targets/PipelinewiseSnowflake.java:300-304): commit an epoch every
-        # interval instead of running the source dry in one availableNow pass
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(src, handle, checkpoint_dir, available_now, processing_time)

@@ -90,6 +90,7 @@ with the same checkpoint_id resumes from the epoch fence (exactly-once).
 from __future__ import annotations
 
 import argparse
+import functools
 import importlib
 import json
 import os
@@ -97,7 +98,7 @@ import shutil
 import sys
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 # ---------------------------------------------------------------------------
 # Source adapters (GenericTap analog: arbitrary reader → same pipeline)
@@ -299,6 +300,21 @@ def _build_transform(
     return transform
 
 
+def _shape_records(
+    recs: DataFrame, metadata: dict[str, Any], transform: Callable[[DataFrame], DataFrame] | None
+) -> DataFrame:
+    """A catalog stream's RECORD rows → its load input: default op ``U``,
+    the stream's WHERE and limit (taps/BigQuery.java:46-50,128-141 — the
+    predicate pushes into the scan; the cap is by ascending seq so it is
+    deterministic across partitionings), then the load-side transform."""
+    recs = recs.withColumn("op", F.coalesce(F.col("op"), F.lit("U")))
+    if metadata.get("where"):
+        recs = recs.filter(F.expr(metadata["where"]))
+    if metadata.get("limit") is not None:
+        recs = recs.orderBy("seq").limit(int(metadata["limit"]))
+    return transform(recs) if transform is not None else recs
+
+
 def _run_sql_hooks(spark: SparkSession, statements: list[str] | None) -> None:
     """before/after SQL hooks (targets/DatamillCoPostgres.java:159-168) —
     run against whatever views the caller registered (stream tables)."""
@@ -343,10 +359,10 @@ def _run_streaming_catalog(spark: SparkSession, cfg: dict[str, Any], catalog) ->
     between two streams' merges of one micro-batch replays exactly-once).
     ``batch_wait_limit_seconds`` → processingTime trigger (the long-running
     tail; caller owns the returned query id); absent → bounded availableNow
-    run, awaited here. The reference analog: a tap continuously feeding a
-    multi-stream target (targets/AbstractPythonTarget.java:72-90)."""
-    from pyspark.sql import types as T
-
+    run, awaited here. Each stream's ``where`` applies per micro-batch; a
+    per-stream ``limit`` is rejected. The reference analog: a tap
+    continuously feeding a multi-stream target
+    (targets/AbstractPythonTarget.java:72-90)."""
     from plugin_singer_spark.ingest.streaming import stream_multi
     from plugin_singer_spark.lake.table import LakeTable
     from plugin_singer_spark.operators.streammap import ALIAS_KEY
@@ -356,6 +372,9 @@ def _run_streaming_catalog(spark: SparkSession, cfg: dict[str, Any], catalog) ->
     root = cfg["tables_root"]
     if cfg.get("sink"):
         raise ValueError("streaming catalog jobs write lake tables only (no file sink tee)")
+    if any(s.stream_node().metadata.get("limit") is not None for s in catalog.selected()):
+        # a row cap has no meaning on an unbounded stream
+        raise ValueError("streaming catalog jobs take no per-stream limit")
     topts = TypeOptions(**cfg["type_options"]) if cfg.get("type_options") else None
     prefix = cfg.get("table_prefix", "")
     table_paths = cfg.get("table_paths") or {}
@@ -375,8 +394,7 @@ def _run_streaming_catalog(spark: SparkSession, cfg: dict[str, Any], catalog) ->
             list(struct.fields) + [T.StructField("op", T.StringType())]
         )
         smap = stream_maps.get(s.stream)
-        t = _build_transform(cfg, cfg.get("quarantine_path"), stream_map=smap) if smap is not None \
-            else _build_transform(cfg, cfg.get("quarantine_path"))
+        t = _build_transform(cfg, cfg.get("quarantine_path"), stream_map=smap)
         alias = ((smap or cfg.get("stream_map") or {}).get(ALIAS_KEY)) or s.stream
         aliases[s.stream] = alias
         tpath = table_paths.get(s.stream) or os.path.join(root, f"{prefix}{alias}")
@@ -388,13 +406,9 @@ def _run_streaming_catalog(spark: SparkSession, cfg: dict[str, Any], catalog) ->
                 spark, tpath, struct, keys, num_buckets=int(cfg.get("num_buckets", 8))
             )
         )
-        from pyspark.sql import functions as F
-
-        def _with_op(df: DataFrame, _t=t) -> DataFrame:
-            out = df.withColumn("op", F.coalesce(F.col("op"), F.lit("U")))
-            return _t(out) if _t is not None else out
-
-        transforms[s.stream] = _with_op
+        transforms[s.stream] = functools.partial(
+            _shape_records, metadata=s.stream_node().metadata, transform=t
+        )
 
     before = {
         name: int(t.snapshot().properties.get("total_source_rows", 0))
@@ -446,10 +460,11 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
     Every SELECTED stream is demuxed out of the shared raw artifact, pruned
     to its selected properties (true column pruning before any shuffle), and
     merged into its own lake table under ``tables_root/<stream>`` using the
-    stream's replication method. LOG_BASED streams are epoch-fenced on
-    ``(checkpoint_id, epoch)`` so re-running the same artifact is a no-op,
-    and compacted after merge so tables stay read-optimized and counts come
-    from footer stats. Per-stream record counts are reported like the
+    stream's replication method. LOG_BASED streams run one epoch of the
+    shared CDC step (ingest/streaming.py): fenced on ``(checkpoint_id,
+    epoch)`` so re-running the same artifact is a no-op, ACTIVATE_VERSION
+    resyncs applied, then compacted so tables stay read-optimized and
+    counts come from footer stats. Per-stream record counts are reported like the
     reference's per-stream metrics (JsonTest.java:61-62: 8 category + 4
     region).
 
@@ -466,10 +481,9 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
     - ``sink``: {"format": "jsonl"|"csv"|"generic", "path"|..., ...} — write
       one ``<stream>.<ext>`` file per selected stream (the reference's file
       targets). With ``tables_root`` absent the job is a pure tap→file run
-      (no lake tables); with both, the sink tees the post-transform records.
+      (no lake tables); with both, the sink tees the post-transform records
+      (a fenced LOG_BASED stream is skipped whole, so it tees nothing).
     """
-    from pyspark.sql import functions as F
-
     from plugin_singer_spark import messages
     from plugin_singer_spark.catalog import (
         StreamsConfiguration,
@@ -480,7 +494,8 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
         infer_metadata,
         to_discovery_doc,
     )
-    from plugin_singer_spark.ingest.pipeline import replay_cdc, sync_full_table, sync_incremental, seq_bookmark
+    from plugin_singer_spark.ingest.pipeline import sync_full_table, sync_incremental, seq_bookmark
+    from plugin_singer_spark.ingest.streaming import _epoch_step
     from plugin_singer_spark.lake.merge import compact
     from plugin_singer_spark.lake.table import LakeTable
 
@@ -523,11 +538,7 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
     checkpoint_id = cfg.get("checkpoint_id", "catalog")
     epoch = int(cfg.get("epoch", 0))
     persist_empty = bool(cfg.get("persist_empty_tables", True))
-    env = None
-    if src_fmt != "jdbc":
-        env = messages.parse_lines(
-            spark.read.text(src["path"]), line_col="value", seq_from_envelope=True
-        )
+    raw_lines = spark.read.text(src["path"]) if src_fmt != "jdbc" else None
     stream_maps = cfg.get("stream_maps") or {}
     prefix = cfg.get("table_prefix", "")
     table_paths = cfg.get("table_paths") or {}
@@ -547,7 +558,8 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
     from plugin_singer_spark.lake.evolution import evolve_schema
 
     inband: dict[str, T.StructType] = {}
-    if env is not None:
+    if raw_lines is not None:
+        env = messages.parse_lines(raw_lines, line_col="value", seq_from_envelope=True)
         for _seq, s_name, struct_ib, _keys in messages.collect_schemas(env, topts):
             inband[s_name] = (
                 struct_ib if s_name not in inband else evolve_schema(inband[s_name], struct_ib)
@@ -567,6 +579,7 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
             extra = [f for f in inband[s.stream].fields if f.name not in known]
             struct = evolve_schema(struct, T.StructType(list(struct.fields) + extra))
         md = s.stream_node().metadata
+        recs = None  # the JDBC scan; JSONL records parse per epoch in shape()
         if src_fmt == "jdbc":
             # relational stream: Spark's distributed JDBC scan of the
             # discovered table, pruned to the selected columns AT THE
@@ -604,15 +617,6 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
             recs = recs.withColumn("seq", seq_src).withColumn("op", F.lit("U"))
         else:
             struct = T.StructType(list(struct.fields) + [T.StructField("op", T.StringType())])
-            recs = messages.records_for_stream(env, s.stream, struct, keep_envelope=("seq",))
-            recs = recs.withColumn("op", F.coalesce(F.col("op"), F.lit("U")))
-        # per-stream WHERE + limit (taps/BigQuery.java:46-50,128-141): the
-        # predicate pushes into the scan; the cap is by ascending seq so it
-        # is deterministic across partitionings
-        if md.get("where"):
-            recs = recs.filter(F.expr(md["where"]))
-        if md.get("limit") is not None:
-            recs = recs.orderBy("seq").limit(int(md["limit"]))
         smap = stream_maps.get(s.stream)
         transform = (
             _build_transform(cfg, cfg.get("quarantine_path"), stream_map=smap)
@@ -624,28 +628,38 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
         from plugin_singer_spark.operators.streammap import ALIAS_KEY
 
         alias = ((smap or cfg.get("stream_map") or {}).get(ALIAS_KEY)) or s.stream
-        if transform is not None:
-            recs = transform(recs)
-        if sink is not None:
-            sink_records[alias] = recs.drop(*[c for c in ("op", "seq") if c in recs.columns])
+        tpath = None if root is None else (
+            table_paths.get(s.stream) or os.path.join(root, f"{prefix}{alias}")
+        )
+
+        def shape(lines: DataFrame | None) -> DataFrame:
+            """The stream's load input from the raw ``lines`` (or the JDBC
+            scan), teed to the sink; on the stream's first sync its table is
+            created from the shaped schema."""
+            out = recs
+            if lines is not None:
+                env = messages.parse_lines(lines, line_col="value", seq_from_envelope=True)
+                out = messages.records_for_stream(env, s.stream, struct, keep_envelope=("seq",))
+            out = _shape_records(out, md, transform)
+            if sink is not None:
+                sink_records[alias] = out.drop(*[c for c in ("op", "seq") if c in out.columns])
+            if tpath is not None and not LakeTable.exists(tpath):
+                tschema = T.StructType([f for f in out.schema.fields if f.name not in ("op", "seq")])
+                # keyless stream (e.g. discovered from raw records, where the
+                # source metadata that names PKs isn't available): full-row
+                # identity key — append-only semantics, like reference targets
+                # without a PK (primary_key_required=false,
+                # targets/PipelinewisePostgres.java:160)
+                keys = s.key_properties or [f.name for f in tschema.fields]
+                LakeTable.create(spark, tpath, tschema, keys, num_buckets=int(cfg.get("num_buckets", 8)))
+            return out
+
         if root is None:
+            shape(raw_lines)
             report[alias] = {"events": sink_records[alias].count(), "table": None}
             if alias != s.stream:
                 report[alias]["source_stream"] = s.stream
             continue
-        tpath = table_paths.get(s.stream) or os.path.join(root, f"{prefix}{alias}")
-        tschema = T.StructType([f for f in recs.schema.fields if f.name not in ("op", "seq")])
-        # keyless stream (e.g. discovered from raw records, where the source
-        # metadata that names PKs isn't available): full-row identity key —
-        # append-only semantics, like reference targets without a PK
-        # (primary_key_required=false, targets/PipelinewisePostgres.java:160)
-        keys = s.key_properties or [f.name for f in tschema.fields]
-        created = not LakeTable.exists(tpath)
-        table = (
-            LakeTable.create(spark, tpath, tschema, keys, num_buckets=int(cfg.get("num_buckets", 8)))
-            if created
-            else LakeTable(spark, tpath)
-        )
         method, repl_key = s.replication()
         default_method = "FULL_TABLE" if src_fmt == "jdbc" else "LOG_BASED"
         method = (method or cfg.get("replication_method", default_method)).upper()
@@ -655,33 +669,25 @@ def run_catalog_job(spark: SparkSession, cfg: dict[str, Any]) -> dict[str, Any]:
                 "stream; a JDBC snapshot source supports FULL_TABLE or "
                 "INCREMENTAL (use the binlog/jsonl source for CDC)"
             )
+        if method == "INCREMENTAL" and not repl_key:
+            raise ValueError(
+                f"stream {s.stream!r}: INCREMENTAL replication requires a "
+                "replication-key (services/SelectedService.java:57-61)"
+            )
+        created = not LakeTable.exists(tpath)
+        table = LakeTable(spark, tpath)
         if method == "INCREMENTAL":
-            if not repl_key:
-                raise ValueError(
-                    f"stream {s.stream!r}: INCREMENTAL replication requires a "
-                    "replication-key (services/SelectedService.java:57-61)"
-                )
+            shaped = shape(raw_lines)
             rep = sync_incremental(
-                table, recs, replication_key=repl_key, stream=s.stream,
+                table, shaped, replication_key=repl_key, stream=s.stream,
                 bookmark=seq_bookmark(table, s.stream),
             )
         elif method == "FULL_TABLE":
-            rep = sync_full_table(table, recs, stream=s.stream)
+            rep = sync_full_table(table, shape(raw_lines), stream=s.stream)
         else:
-            rep = replay_cdc(
-                table, recs, stream=s.stream, epoch=epoch,
-                checkpoint_id=checkpoint_id, mode=mode,
-            )
-            if rep.record_count > 0:
-                # ACTIVATE_VERSION (Singer full-resync fence): rows older
-                # than the activation point were not re-sent — drop them
-                from plugin_singer_spark.lake.merge import activate_version
-
-                acts = [
-                    fence for _q, nm, fence in messages.collect_activate_versions(env) if nm == s.stream
-                ]
-                if acts:
-                    activate_version(table, below_seq=max(acts))
+            # one epoch of the shared step: fenced on (checkpoint_id, epoch),
+            # ACTIVATE_VERSION resyncs applied after the merge
+            rep = _epoch_step(table, s.stream, epoch, checkpoint_id, raw_lines, parse=shape, mode=mode)
             compact(table, min_delta_files=1)
         if rep.record_count == 0 and created and not persist_empty:
             shutil.rmtree(tpath, ignore_errors=True)

@@ -353,9 +353,6 @@ class LakeTable:
             df = df.select(*columns)
         return df
 
-    def read_sorted_within_buckets(self, version: int | None = None) -> DataFrame:
-        return self.read(version)
-
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Incremental changelog (Iceberg incremental-scan analog): the
         change rows committed in versions (from_version, to_version] — the
@@ -568,7 +565,10 @@ class LakeTable:
         """Epoch fence: the engine's exactly-once primitive. foreachBatch
         checks this before merging; a replayed epoch ≤ fence is skipped
         (idempotent). Upgrade over the reference's save-state-after-success
-        (taps/AbstractPythonTap.java:104-106) which is only at-least-once."""
+        (taps/AbstractPythonTap.java:104-106) which is only at-least-once.
+        A table with no committed snapshot yet has fenced nothing (-1)."""
+        if self.current_version() is None:
+            return -1
         return int(self.snapshot().properties.get("epochs", {}).get(checkpoint_id, -1))
 
     # ---------- statistics (metadata-only, no Spark job) ----------

@@ -136,8 +136,8 @@ def parse_records_lean(
     shared parse blocks column pruning through the json_tuple Generate, so
     every auxiliary pass the merge makes (bucket probe, stats) re-parses
     full records — measured 3× epoch cost at sf0.1. ACTIVATE_VERSION
-    fences are detected by :func:`scan_activation_fence` instead (separate
-    substring-prefiltered scan, ~0.5 s/epoch warm)."""
+    fences are detected by :func:`observe_fence_flag` on the raw lines
+    and, when it fires, :func:`scan_activation_fence`."""
     p = lines.select(
         F.json_tuple(F.col(line_col), "type", "stream", "seq", "record").alias(
             "type", "stream", "_seq", "record"
@@ -192,9 +192,15 @@ def scan_activation_fence(
     rejects ~all lines before any JSON parse (pure sequential scan, no
     shuffle; measured ~0.5 s per 8-file epoch at sf0.1 vs ~9 s/epoch for
     the rejected design that hung an Observation on the shared parse node).
-    At cluster scale this doubles raw input IO per epoch; CDC taps emit
-    ACTIVATE_VERSION only at resync boundaries, so deployments that never
-    resync can skip the scan (``activate_fences=False`` in replay_files)."""
+    The replay drivers run it only for an epoch whose
+    :func:`observe_fence_flag` fired, so raw input is read twice only in
+    the epochs that carry a resync; CDC taps emit ACTIVATE_VERSION only at
+    resync boundaries.
+
+    The fence is the message's ``version`` (the tap sets it to the
+    resync's FIRST seq), else the message's own ``seq`` (a conservative
+    upper bound); rows with a lower seq were not re-sent and are stale
+    (lake.merge.activate_version applies the delete)."""
     row = (
         # prefilter is case-insensitive to match the upper()'d type dispatch
         # below (a mixed-case tap must not skip resync truncation, ADVICE r3)
@@ -207,7 +213,7 @@ def scan_activation_fence(
         .filter((F.upper(F.col("type")) == "ACTIVATE_VERSION") & (F.col("stream") == stream))
         .agg(
             F.max(
-                F.coalesce(F.col("_version").cast("long"), F.col("_seq").cast("long"))
+                F.coalesce(F.col("_version").try_cast("long"), F.col("_seq").cast("long"))
             ).alias("fence")
         )
         .collect()[0]
@@ -257,32 +263,6 @@ def collect_schemas(
         msg = json.loads(r["raw"])
         struct = json_schema_to_struct(msg.get("schema") or {}, opts)
         out.append((r["seq"], r["stream"], struct, list(msg.get("key_properties") or [])))
-    return out
-
-
-def collect_activate_versions(env: DataFrame) -> list[tuple[int, str, int]]:
-    """ACTIVATE_VERSION messages in seq order → (seq, stream, fence).
-
-    Driver-side control-plane rows, like STATE/SCHEMA. The ``fence`` is the
-    activation point in change-sequence units: rows with seq below it were
-    not re-sent by the full resync and are stale
-    (lake.merge.activate_version applies the delete). Singer taps bracket a
-    resync with a ``version`` marker; in this engine's seq-ordered streams
-    the tap sets ``version`` to the resync's FIRST seq — absent that, the
-    message's own seq is the (conservative upper-bound) fence."""
-    rows = (
-        env.filter(F.col("type") == "ACTIVATE_VERSION")
-        .select("seq", "stream", F.get_json_object("raw", "$.version").alias("version"))
-        .orderBy("seq")
-        .collect()
-    )
-    out = []
-    for r in rows:
-        try:
-            fence = int(r["version"])
-        except (TypeError, ValueError):
-            fence = int(r["seq"])
-        out.append((int(r["seq"]), r["stream"], fence))
     return out
 
 

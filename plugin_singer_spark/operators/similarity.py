@@ -59,28 +59,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """:func:`dot` with the fold unrolled into `dim` explicit terms.
-
-    HOF expressions (`aggregate`/`zip_with`) evaluate interpreted — outside
-    whole-stage codegen, a lambda dispatch per element. The unrolled chain
-    ``0.0 + a[0]·b[0] + a[1]·b[1] + …`` is GetArrayItem/Multiply/Add nodes,
-    all codegen'd, and keeps the fold's exact left-associated float addition
-    order (same start value, same cast-before-multiply), so results are
-    BIT-EQUAL to :func:`dot` — hash-oracle paths could use either
-    (``tests/test_operators.py`` asserts the equivalence). MEASURED AND
-    REJECTED for the wired paths (r5 A/B, scripts/ab_cosine_kernel.py): at
-    dim 64 the 64-term chain is 2× slower than the fold in lsh_topk and
-    4.5× slower on the 9M-pair near-dup self-join (where the wide
-    expression sits under both the threshold filter and the projection).
-    Kept as the documented alternative (and the bit-equality contract it
-    tests)."""
-    expr: Column = F.lit(0.0)
-    for i in range(dim):
-        expr = expr + a[i].cast("double") * b[i].cast("double")
-    return expr
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
@@ -186,46 +164,6 @@ def _plane_matrix(dim: int, planes: int, tables: int):
     x = (x ^ (x >> np.uint64(27))) * np.uint64(_SM_M2)
     x = x ^ (x >> np.uint64(31))
     return (x >> np.uint64(11)).astype(np.float64) * 2.0**-52 - 1.0
-
-
-def pair_cosine_kernel() -> Column:
-    """Arrow-batched cosine for candidate scoring — MEASURED AND REJECTED
-    for the wired paths; kept as the documented alternative.
-
-    Hypothesis was that the declarative :func:`dot` (a higher-order-function
-    expression, interpreted outside whole-stage codegen) would lose to a
-    vectorized numpy pass at millions of candidate pairs. The r5 A/B
-    (``scripts/ab_cosine_kernel.py``, BENCH/ANN_CROSSOVER.md appendix) says
-    otherwise at dim 64: the Arrow path pays serialization of BOTH dim-wide
-    vectors per candidate row into the Python worker (~1 KB/pair — the
-    einsum itself is ~0.5 µs/pair, the transfer dominates), while the HOF
-    fold stays JVM-side next to the join. lsh_topk 1M corpus: HOF 4.6 s vs
-    Arrow 16.2 s; high-multiplicity near-dup self-join (9M qualifying
-    pairs): HOF 42 s vs Arrow 44 s — HOF wins or ties every regime, so every
-    wired path keeps the fold. This kernel would win where dim is large
-    enough that per-element interpretation overhead exceeds transfer cost —
-    re-measure before wiring if dims grow past ~1k. Numpy's row-sum can
-    differ from the left fold by ~1 ulp, so hash-oracle paths must never
-    use it. Returns a column-function: ``kernel(va, vb, na, nb)``."""
-    import numpy as np
-    import pandas as pd
-
-    def _cos(va, vb, na, nb):
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        # Arrow hands array columns over as a Series of numpy arrays —
-        # np.stack reuses those buffers; .tolist() would round-trip every
-        # element through Python objects (~10× slower at dim 64, measured)
-        A = np.stack(va.to_numpy()).astype(np.float64, copy=False)
-        B = np.stack(vb.to_numpy()).astype(np.float64, copy=False)
-        return pd.Series(
-            np.round(np.einsum("ij,ij->i", A, B) / (na.to_numpy() * nb.to_numpy()), 6)
-        )
-
-    _cos.__annotations__ = {
-        "va": pd.Series, "vb": pd.Series, "na": pd.Series, "nb": pd.Series, "return": pd.Series
-    }
-    return F.pandas_udf(_cos, T.DoubleType())
 
 
 def auto_planes(n_corpus: int, target_bucket: int = 32, lo: int = 4, hi: int = 24) -> int:
@@ -425,10 +363,10 @@ def lsh_topk(
     # was the whole query cost (r5 crossover re-measure). The groupBy
     # combines duplicate pairs map-side, so the exchange carries only
     # (query, vec, score) triplets. Scoring expression = the HOF fold:
-    # the r5 three-way A/B (scripts/ab_cosine_kernel.py) measured it 3.5×
-    # faster than the Arrow kernel here (4.6 s vs 16.2 s at 1M — Arrow
+    # the three-way A/B (BENCH/COSINE_KERNEL_AB.md) measured it 3.5×
+    # faster than an Arrow kernel here (4.6 s vs 16.2 s at 1M — Arrow
     # pays dim-wide vector transfer to Python per candidate) and 2×
-    # faster than the unrolled codegen chain.
+    # faster than an unrolled codegen chain.
     scored = (
         q.join(c, on="bucket")
         .select(
@@ -565,9 +503,9 @@ def ivf_topk(
     # no pair dedup needed: each corpus vector lives in exactly ONE
     # inverted list (nprobe=1 corpus-side), so (query, vec) pairs are
     # unique by construction — the old dropDuplicates was a pure
-    # vector-carrying shuffle for nothing. Scoring = the HOF fold (the r5
-    # A/B rejected the Arrow kernel: vector transfer per candidate, see
-    # pair_cosine_kernel).
+    # vector-carrying shuffle for nothing. Scoring = the HOF fold (the A/B
+    # in BENCH/COSINE_KERNEL_AB.md rejected an Arrow kernel: vector
+    # transfer per candidate).
     scored = (
         q.join(c, on="cluster")
         .select(
@@ -664,7 +602,7 @@ def embedding_neardup_pairs(
     # never per collision; (3) score each unique pair exactly once.
     # Wins or ties every measured regime (BENCH/COSINE_KERNEL_AB.md).
     # Scoring expression = the HOF fold (Arrow kernel and unrolled chain
-    # measured and rejected, see pair_cosine_kernel / dot_unrolled).
+    # measured and rejected, BENCH/COSINE_KERNEL_AB.md).
     # Both stages persist MEMORY_AND_DISK (pressure evicts rather than
     # OOMs): base feeds the two gather joins, buck feeds both self-join
     # sides (r2: recomputing per side = 2 full matmul+explode passes);

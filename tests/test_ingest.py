@@ -63,18 +63,24 @@ def test_full_table_truncate_vs_append(spark, tmp_path, table):
 def test_replay_parity_and_resume(spark, table):
     spec = BinlogSpec(num_events=4000, num_repos=10, paths_per_repo=30)
     binlog = generate_binlog(spark, spec)
-    stats = replay_chunked(table, binlog, batch_events=1000, checkpoint_id="cp")
-    assert stats.events == 4000 and stats.batches == 4
+    shaped = []  # one transform call per committed epoch; a fenced one runs none
+
+    def transform(df):
+        shaped.append(1)
+        return df
+
+    stats = replay_chunked(table, binlog, batch_events=1000, checkpoint_id="cp", transform=transform)
+    assert stats.events == 4000 and stats.batches == 4 and len(shaped) == 4
     exp = expected_final_state(binlog).select("repo", "path", F.sha2("content", 256).alias("h"))
     got = table.read().select("repo", "path", F.sha2("content", 256).alias("h"))
     assert exp.exceptAll(got).count() == 0 and got.exceptAll(exp).count() == 0
     # idempotent rerun: all epochs fenced
-    stats2 = replay_chunked(table, binlog, batch_events=1000, checkpoint_id="cp")
-    assert stats2.events == 0
+    stats2 = replay_chunked(table, binlog, batch_events=1000, checkpoint_id="cp", transform=transform)
+    assert stats2.events == 0 and len(shaped) == 4
     # mid-stream resume with extended log
     binlog2 = generate_binlog(spark, BinlogSpec(num_events=5000, num_repos=10, paths_per_repo=30))
-    stats3 = replay_chunked(table, binlog2, batch_events=1000, checkpoint_id="cp")
-    assert stats3.events == 1000
+    stats3 = replay_chunked(table, binlog2, batch_events=1000, checkpoint_id="cp", transform=transform)
+    assert stats3.events == 1000 and len(shaped) == 5
     exp2 = expected_final_state(binlog2).select("repo", "path", F.sha2("content", 256).alias("h"))
     got2 = table.read().select("repo", "path", F.sha2("content", 256).alias("h"))
     assert exp2.exceptAll(got2).count() == 0 and got2.exceptAll(exp2).count() == 0

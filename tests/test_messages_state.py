@@ -139,6 +139,8 @@ def test_activation_fence_case_insensitive(spark, tmp_path):
         {"type": "RECORD", "stream": "repos", "seq": 1, "record": "{}"},
         {"type": "activate_version", "stream": "repos", "seq": 2, "version": 2},
         {"type": "Activate_Version", "stream": "repos", "seq": 9, "version": 7},
+        # a version that is not a number falls back to the message's seq
+        {"type": "ACTIVATE_VERSION", "stream": "other", "seq": 5, "version": "v5"},
     ]
     p.write_text("\n".join(_json.dumps(r) for r in rows) + "\n")
     lines = spark.read.text(str(p))
@@ -148,3 +150,4 @@ def test_activation_fence_case_insensitive(spark, tmp_path):
     assert obs.get["has_fence"] == 1
 
     assert messages.scan_activation_fence(lines, "repos", line_col="value") == 7
+    assert messages.scan_activation_fence(lines, "other", line_col="value") == 5

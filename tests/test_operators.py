@@ -244,21 +244,6 @@ def test_cosine_self_is_one(spark, emb):
     assert abs(d["c"] - 1.0) < 1e-6
 
 
-def test_dot_unrolled_bit_equals_fold(spark, emb):
-    # unrolled codegen chain must keep the fold's exact left-assoc float
-    # addition order: BIT-equal (not approx) so hash-oracle paths can swap
-    dim = len(emb.first()["embedding"])
-    a, b = emb.alias("a").limit(20), emb.alias("b").limit(20)
-    pairs = a.crossJoin(b).select(
-        F.col("a.embedding").alias("va"), F.col("b.embedding").alias("vb")
-    )
-    rows = pairs.select(
-        sim.dot(F.col("va"), F.col("vb")).alias("fold"),
-        sim.dot_unrolled(F.col("va"), F.col("vb"), dim).alias("unrolled"),
-    ).collect()
-    assert rows and all(r["fold"] == r["unrolled"] for r in rows)
-
-
 # ---- multimodal ------------------------------------------------------------
 
 def test_multimodal_features_deterministic(spark):

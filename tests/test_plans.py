@@ -208,3 +208,35 @@ def test_neardup_bare_pair_dedup_then_gather(spark):
     from plugin_singer_spark.operators.stagecache import release_stage_caches
 
     release_stage_caches()
+
+
+def test_lean_jsonl_epoch_runs_two_spark_jobs(spark, tmp_path):
+    """One lean-JSONL ``replay_files`` epoch (the benchmarked replay path:
+    MOR, no in-batch dedup) runs exactly two Spark jobs: the bucket write's
+    shuffle-map stage and its result stage. The ACTIVATE_VERSION flag rides
+    that scan and the epoch fence reads the manifest, so neither adds an
+    action; an extra job here is a per-epoch fixed cost at any scale."""
+    from plugin_singer_spark.datagen import BinlogSpec
+    from plugin_singer_spark.datagen.binlog import write_singer_jsonl
+    from plugin_singer_spark.ingest.streaming import replay_files
+
+    src = str(tmp_path / "jsonl")
+    write_singer_jsonl(spark, BinlogSpec(num_events=3000, num_repos=5, paths_per_repo=20,
+                                         num_partitions=3), src)
+    table = LakeTable.create(spark, str(tmp_path / "t"), REPOS, ["repo", "path"], num_buckets=4)
+    record_schema = T.StructType(list(REPOS.fields) + [T.StructField("op", T.StringType())])
+
+    def epoch():
+        return replay_files(spark, table, src, files_per_batch=1, checkpoint_id="jobs",
+                            input_format="jsonl", record_schema=record_schema, mode="mor",
+                            final_compact=False, dedup=False, max_batches=1)
+
+    epoch()  # warm-up epoch: first-use planning must not count
+    sc = spark.sparkContext
+    sc.setJobGroup("lean_epoch", "one lean-JSONL replay epoch")
+    try:
+        stats = epoch()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats.batches == 1 and stats.events == 1000
+    assert len(sc.statusTracker().getJobIdsForGroup("lean_epoch")) == 2

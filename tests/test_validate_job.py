@@ -429,9 +429,12 @@ def test_job_sql_hooks(spark, tmp_path):
     assert spark.sql("SELECT n FROM hook_result").collect()[0]["n"] == 1
 
 
-def test_catalog_job_where_limit_and_activate_version(spark, tmp_path):
+@pytest.mark.parametrize("streaming", [False, True])
+def test_catalog_job_where_limit_and_activate_version(spark, tmp_path, streaming):
     """Per-stream WHERE/limit shaping (taps/BigQuery.java:46-50,128-141) and
-    ACTIVATE_VERSION full-resync fence through the catalog job."""
+    ACTIVATE_VERSION full-resync fence through the catalog job — batch and
+    ``streaming: true`` alike (both run the shared epoch step). A per-stream
+    limit is batch-only: a streaming job rejects it."""
     import json as _json
 
     from plugin_singer_spark.job import run_job
@@ -446,20 +449,27 @@ def test_catalog_job_where_limit_and_activate_version(spark, tmp_path):
         # version = first seq of the resync — the activation fence
         + [_json.dumps({"type": "ACTIVATE_VERSION", "stream": "cat", "seq": 200, "version": 100})]
     )
-    raw = tmp_path / "raw.jsonl"
-    raw.write_text("\n".join(lines) + "\n")
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "raw.jsonl").write_text("\n".join(lines) + "\n")
+    selection = {"stream": "cat", "selected": True, "where": "id >= 1"}
     cfg = {
         "catalog": {"streams": [{"stream": "cat", "key_properties": ["id"],
                                  "schema": {"type": "object", "properties": {
                                      "id": {"type": "integer"},
                                      "name": {"type": ["null", "string"]}}}}]},
-        "streams_configurations": [
-            {"stream": "cat", "selected": True, "where": "id >= 1", "limit": 100},
-        ],
-        "source": {"path": str(raw)},
+        "streams_configurations": [selection],
+        "source": {"path": str(src)},
         "tables_root": str(tmp_path / "lake"),
         "num_buckets": 2,
+        "streaming": streaming,
     }
+    capped = {**cfg, "streams_configurations": [{**selection, "limit": 100}]}
+    if streaming:
+        with pytest.raises(ValueError, match="limit"):
+            run_job(spark, capped)
+    else:
+        cfg = capped
     out = run_job(spark, cfg)["streams"]["cat"]
     from plugin_singer_spark.lake import LakeTable
 
